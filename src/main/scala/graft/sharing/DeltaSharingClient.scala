@@ -32,8 +32,6 @@ final class DeltaSharingClient(val profile: Profile,
       * 4xx other than 429 fail immediately (they are deterministic). */
     maxRetries: Int = 3) {
 
-  private val http = HttpClient.newBuilder()
-    .connectTimeout(java.time.Duration.ofSeconds(30)).build()
   private val mapper = new ObjectMapper()
 
   // ---- auth -------------------------------------------------------------
@@ -234,7 +232,7 @@ final class DeltaSharingClient(val profile: Profile,
     } + "\""
 
   private def sendOnce(req: HttpRequest): HttpResponse[String] =
-    try http.send(req, HttpResponse.BodyHandlers.ofString())
+    try DeltaSharingClient.http.send(req, HttpResponse.BodyHandlers.ofString())
     catch {
       case e: InterruptedException =>
         // Task cancellation: restore the interrupt flag and fail fast.
@@ -288,10 +286,8 @@ final class DeltaSharingClient(val profile: Profile,
           }
           if (!retryable || attempt >= maxRetries)
             return outcome.fold(throw _, identity)
-          val retryAfterMs = outcome.toOption.flatMap { r =>
-            val v = r.headers().firstValue("Retry-After")
-            if (v.isPresent) v.get.toLongOption else None
-          }.map(_ * 1000L).getOrElse(0L)
+          val retryAfterMs = outcome.toOption
+            .map(r => DeltaSharingClient.retryAfterMs(r)).getOrElse(0L)
           try Thread.sleep(DeltaSharingClient.backoffMs(attempt, retryAfterMs))
           catch {
             case e: InterruptedException =>
@@ -348,9 +344,21 @@ final class DeltaSharingClient(val profile: Profile,
 }
 
 object DeltaSharingClient {
+  /** The JVM's one HTTP client, shared by every REST client and every
+    * graftshare stream so that requests reuse pooled connections instead
+    * of paying a TCP handshake per client or per opened file. */
+  private[sharing] lazy val http: HttpClient = HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(30)).build()
+
   /** Upper bound on a single retry sleep — a hostile/misconfigured
     * `Retry-After: 86400` must not park a task thread for hours. */
   val maxBackoffMs: Long = 10000L
+
+  /** A response's `Retry-After` in ms (delay-seconds form; 0 if absent
+    * or an HTTP date). */
+  def retryAfterMs(resp: HttpResponse[_]): Long =
+    resp.headers().firstValue("Retry-After").orElse("").trim
+      .toLongOption.map(_ * 1000L).getOrElse(0L)
 
   /** Per-attempt sleep: max(Retry-After, 100·2^attempt), capped. */
   def backoffMs(attempt: Int, retryAfterMs: Long): Long =

@@ -1,7 +1,11 @@
 package graft.sharing.fs
 
+import java.io.InputStream
 import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.http.{HttpRequest, HttpResponse}
+import java.nio.ByteBuffer
+import java.util.concurrent.CompletableFuture
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
@@ -41,7 +45,7 @@ final class SignedHttpFileSystem extends FileSystem {
     val (url, size) = SignedHttpFileSystem.decode(f)
     new FSDataInputStream(new SignedHttpInputStream(url, size,
       math.max(bufferSize, 4 * 1024 * 1024),
-      SignedHttpFileSystem.decodeRefresh(f)))
+      SignedHttpFileSystem.decodeRefresh(f), Option(statistics)))
   }
 
   override def getFileStatus(f: Path): FileStatus =
@@ -198,47 +202,158 @@ object SignedHttpFileSystem {
   }
 }
 
+/** A range GET that could not deliver the bytes it asked for: a URL the
+  * store rejects, a response that does not match its request, or a
+  * transient failure that outlasted the retries. The stream fails with
+  * this rather than ever handing back wrong or short bytes. */
+final class RangeReadException(message: String, cause: Throwable = null)
+    extends java.io.IOException(message, cause)
+
 /** Seekable, positioned-read HTTP stream over one signed URL. Sequential
-  * reads pull `chunkSize` ranges; positioned reads (`read(pos, …)`, the
-  * parquet footer/column-chunk path) issue exact-range GETs without
-  * disturbing the cursor.
+  * reads pull `chunkSize` ranges; positioned reads (`read(pos, …)`) issue
+  * exact-range GETs without disturbing the cursor; `readVectored` (the
+  * parquet column-chunk path) merges nearby ranges into one GET.
+  *
+  * Every GET is checked against its request: a 206 must carry the
+  * requested `Content-Range` and exactly that many bytes, and a 200 (a
+  * store or CDN may ignore `Range`) is cut down to the range. 429, 5xx,
+  * connection failures and short bodies are retried 3 times with the
+  * REST client's backoff (100·2^n ms, or the response's `Retry-After`);
+  * anything else fails with a [[RangeReadException]].
   *
   * If the signed URL has expired by the time a task reads it (4xx) and a
   * `RefreshSpec` is present, the stream re-queries the sharing server for
-  * a fresh URL ONCE and retries — the per-task refresh story the
-  * reference lacks (action.rs:196-200 parsed but unused). Fresh URLs are
-  * cached per file id so a thousand tasks don't re-list a thousand times.
+  * a fresh URL and retries — the per-task refresh story the reference
+  * lacks (action.rs:196-200 parsed but unused). Fresh URLs are cached per
+  * file id so a thousand tasks don't re-list a thousand times.
+  *
+  * `stats`, the owning FileSystem's statistics, counts one read op per
+  * GET and the bytes handed to the caller, which is what Spark reports
+  * as a task's input bytes.
   */
 final class SignedHttpInputStream(url: String, size: Long, chunkSize: Int,
-    refresh: Option[SignedHttpFileSystem.RefreshSpec] = None)
+    refresh: Option[SignedHttpFileSystem.RefreshSpec] = None,
+    stats: Option[FileSystem.Statistics] = None)
     extends FSInputStream {
+  import SignedHttpInputStream.{Rejected, Transient, maxRetries}
 
-  private val http = HttpClient.newHttpClient()
   private var pos = 0L
   private var buf: Array[Byte] = Array.emptyByteArray
   private var bufStart = 0L
-  private var activeUrl = refresh.flatMap(r =>
+  @volatile private var activeUrl = refresh.flatMap(r =>
     SignedHttpInputStream.freshUrls.get(SignedHttpInputStream.cacheKey(r)))
     .getOrElse(url)
 
-  /** Up to TWO refresh attempts per range read: the first may return a
-    * CACHED fresh URL (populated by another stream's listing); if that
-    * one has expired too, the second attempt passes it as the failed URL,
-    * which invalidates the cache entry and forces a real re-list. */
-  private def fetchRange(start: Long, end: Long,
-      refreshAttempts: Int = 0): Array[Byte] = {
-    val req = HttpRequest.newBuilder(URI.create(activeUrl))
-      .header("Range", s"bytes=$start-$end").GET().build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofByteArray())
-    if (resp.statusCode() >= 400) {
-      if (resp.statusCode() < 500 && refresh.isDefined && refreshAttempts < 2) {
-        activeUrl = SignedHttpInputStream.refreshUrl(refresh.get, activeUrl)
-        return fetchRange(start, end, refreshAttempts + 1)
+  /** GETs bytes `start..end` (inclusive) and returns `consume` applied to
+    * a body positioned at `start`; `consume` reads with `readExactly`.
+    *
+    * Up to TWO refresh attempts on a 4xx: the first may return a CACHED
+    * fresh URL (populated by another stream's listing); if that one has
+    * expired too, the second attempt passes it as the failed URL, which
+    * invalidates the cache entry and forces a real re-list. */
+  private def fetch[T](start: Long, end: Long)(consume: InputStream => T): T = {
+    var attempt = 0
+    var refreshes = 0
+    while (true) {
+      try return fetchOnce(start, end, consume)
+      catch {
+        case Rejected(_) if refresh.isDefined && refreshes < 2 =>
+          refreshes += 1
+          activeUrl = SignedHttpInputStream.refreshUrl(refresh.get, activeUrl)
+        case Rejected(code) => throw new RangeReadException(
+          s"HTTP $code reading range $start-$end (signed URL may have expired)")
+        case t: Transient
+            if attempt < maxRetries && !Thread.currentThread().isInterrupted =>
+          try Thread.sleep(
+            graft.sharing.DeltaSharingClient.backoffMs(attempt, t.retryAfterMs))
+          catch {
+            case _: InterruptedException =>
+              Thread.currentThread().interrupt()
+              throw new java.io.InterruptedIOException(
+                s"retry of range $start-$end interrupted")
+          }
+          attempt += 1
+        case e: Transient => throw new RangeReadException(
+          s"range $start-$end failed after ${attempt + 1} attempts: " +
+            e.getMessage, e)
       }
-      throw new java.io.IOException(
-        s"HTTP ${resp.statusCode()} reading range $start-$end (signed URL may have expired)")
     }
-    resp.body()
+    throw new IllegalStateException("unreachable")
+  }
+
+  private def fetchOnce[T](start: Long, end: Long,
+      consume: InputStream => T): T =
+    try {
+      val req = HttpRequest.newBuilder(URI.create(activeUrl))
+        .header("Range", s"bytes=$start-$end").GET().build()
+      val resp = graft.sharing.DeltaSharingClient.http.send(req,
+        HttpResponse.BodyHandlers.ofInputStream())
+      stats.foreach(_.incrementReadOps(1))
+      val body = resp.body()
+      try {
+        resp.statusCode() match {
+          case 206 => checkContentRange(resp, start, end)
+          case 200 =>
+            // the whole object: its length must be the file's, and the
+            // range is cut out of it
+            resp.headers().firstValueAsLong("Content-Length").ifPresent { n =>
+              if (n != size) throw new RangeReadException(
+                s"HTTP 200 body of $n bytes for a $size-byte object")
+            }
+            body.skipNBytes(start)
+          case code if code == 429 || code >= 500 =>
+            throw new Transient(s"HTTP $code", null,
+              graft.sharing.DeltaSharingClient.retryAfterMs(resp))
+          case code if code >= 400 => throw Rejected(code)
+          case code => throw new RangeReadException(
+            s"HTTP $code answering range $start-$end (expected 206 or 200)")
+        }
+        val out = consume(body)
+        if (resp.statusCode() == 206 && body.read() != -1)
+          throw new RangeReadException(
+            s"range $start-$end: body longer than its Content-Range")
+        out
+      } finally body.close()
+    } catch {
+      case _: InterruptedException =>
+        Thread.currentThread().interrupt()
+        throw new java.io.InterruptedIOException(
+          s"read of range $start-$end interrupted")
+      case e: javax.net.ssl.SSLException =>
+        throw new RangeReadException(s"TLS failure reading range $start-$end", e)
+      case e @ (_: RangeReadException | _: Transient | _: Rejected) => throw e
+      // connection refused or reset, premature end of the body
+      case e: java.io.IOException => throw new Transient(e.toString, e)
+    }
+
+  /** A 206 must be for exactly the requested bytes of an object of this
+    * size. As RFC 9110 allows, the unit's case may vary and the total may
+    * be `*` when the server does not know it. */
+  private def checkContentRange(resp: HttpResponse[_], start: Long,
+      end: Long): Unit = {
+    val cr = resp.headers().firstValue("Content-Range").orElse("")
+    val matches = cr.trim match {
+      case SignedHttpInputStream.ContentRange(unit, s, e, total) =>
+        unit.equalsIgnoreCase("bytes") && s.toLongOption.contains(start) &&
+          e.toLongOption.contains(end) &&
+          (total == "*" || total.toLongOption.contains(size))
+      case _ => false
+    }
+    if (!matches) throw new RangeReadException(
+      s"HTTP 206 with Content-Range '$cr', expected 'bytes $start-$end/$size'")
+  }
+
+  /** Exactly `n` bytes of `in` into `b`; a body that ends first is a
+    * truncated response, retried like a dropped connection. */
+  private def readExactly(in: InputStream, b: Array[Byte], off: Int,
+      n: Int): Unit = {
+    val got = in.readNBytes(b, off, n)
+    if (got < n) throw new Transient(s"body ended after $got of $n bytes", null)
+  }
+
+  private def delivered(n: Int): Int = {
+    if (n > 0) stats.foreach(_.incrementBytesRead(n))
+    n
   }
 
   override def seek(newPos: Long): Unit = {
@@ -254,6 +369,7 @@ final class SignedHttpInputStream(url: String, size: Long, chunkSize: Int,
     if (pos < bufStart || pos >= bufStart + buf.length) fill(pos)
     val b = buf((pos - bufStart).toInt) & 0xff
     pos += 1
+    delivered(1)
     b
   }
 
@@ -264,28 +380,87 @@ final class SignedHttpInputStream(url: String, size: Long, chunkSize: Int,
     val n = math.min(len, avail)
     System.arraycopy(buf, (pos - bufStart).toInt, b, off, n)
     pos += n
-    n
+    delivered(n)
   }
 
   /** Positioned read: exact range, cursor untouched. */
   override def read(position: Long, b: Array[Byte], off: Int, len: Int): Int = {
+    validatePositionedReadArgs(position, b, off, len)
     if (position >= size) return -1
-    val end = math.min(position + len, size) - 1
-    val got = fetchRange(position, end)
-    System.arraycopy(got, 0, b, off, got.length)
-    got.length
+    val n = math.min(len.toLong, size - position).toInt
+    if (n == 0) return 0
+    fetch(position, position + n - 1)(readExactly(_, b, off, n))
+    delivered(n)
+  }
+
+  /** Sorts and merges the ranges with Hadoop's own helpers, fetches each
+    * merged range with one GET and slices it into each range's buffer,
+    * skipping the gaps. Every future is complete when this returns; after
+    * a failure the remaining ranges fail with the same error. */
+  override def readVectored(ranges: java.util.List[_ <: FileRange],
+      allocate: java.util.function.IntFunction[ByteBuffer]): Unit = {
+    val sorted = VectoredReadUtils.validateAndSortRanges(ranges,
+      java.util.Optional.of(java.lang.Long.valueOf(size)))
+    sorted.forEach(_.setData(new CompletableFuture[ByteBuffer]))
+    var failure: Option[Throwable] = None
+    VectoredReadUtils.mergeSortedRanges(sorted, 1, minSeekForVectorReads(),
+        maxReadSizeForVectorReads()).forEach { merged =>
+      val parts = merged.getUnderlying.asScala.toSeq
+      if (failure.isEmpty) try {
+        val bufs = parts.map(r => allocate.apply(r.getLength))
+        fetch(merged.getOffset, merged.getOffset + merged.getLength - 1) { in =>
+          var at = merged.getOffset
+          parts.zip(bufs).foreach { case (r, bb) =>
+            in.skipNBytes(r.getOffset - at)
+            if (bb.hasArray)
+              readExactly(in, bb.array, bb.arrayOffset + bb.position(), r.getLength)
+            else {
+              val tmp = new Array[Byte](r.getLength)
+              readExactly(in, tmp, 0, r.getLength)
+              bb.duplicate().put(tmp)
+            }
+            at = r.getOffset + r.getLength
+          }
+        }
+        parts.zip(bufs).foreach { case (r, bb) =>
+          bb.limit(bb.position() + r.getLength)
+          delivered(r.getLength)
+          r.getData.complete(bb)
+        }
+      } catch { case e: java.io.IOException => failure = Some(e) }
+      failure.foreach(e => parts.foreach(_.getData.completeExceptionally(e)))
+    }
   }
 
   private def fill(at: Long): Unit = {
-    val end = math.min(at + chunkSize, size) - 1
-    buf = fetchRange(at, end)
+    val n = math.min(chunkSize.toLong, size - at).toInt
+    val b = new Array[Byte](n)
+    fetch(at, at + n - 1)(readExactly(_, b, 0, n))
+    buf = b
     bufStart = at
   }
 
-  override def close(): Unit = ()
+  override def close(): Unit = buf = Array.emptyByteArray
 }
 
 object SignedHttpInputStream {
+  /** Retries of a range GET after a transient failure, as the REST
+    * client's default. */
+  private val maxRetries = 3
+
+  /** A 4xx: the URL is refused, most often because it expired. */
+  private final case class Rejected(status: Int)
+      extends java.io.IOException(s"HTTP $status")
+
+  /** A failure that a later attempt may not repeat; `retryAfterMs` is
+    * the server's requested delay, if it sent one. */
+  private final class Transient(message: String, cause: Throwable,
+      val retryAfterMs: Long = 0L)
+      extends java.io.IOException(message, cause)
+
+  /** `Content-Range: <unit> <first>-<last>/<total or *>`. */
+  private val ContentRange = """([A-Za-z]+) +(\d+)-(\d+)/(\d+|\*)""".r
+
   /** (table key # file id) → fresh signed URL, shared across streams in
     * this JVM. Keyed per table snapshot so same-named files in different
     * shares/versions can never serve each other's URLs. */
